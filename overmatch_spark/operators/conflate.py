@@ -249,7 +249,6 @@ def nearest_join(
     a_id: str = "osm_id",
     b_id: str = "id",
     res0: int = 16,
-    coarse_res: int = 13,
     caches: list | None = None,
 ) -> DataFrame:
     """Exact nearest-neighbor join as a PUBLIC operator: for EVERY
@@ -267,9 +266,7 @@ def nearest_join(
     b = layer_b.select(F.col(b_id).alias("id"), "lon", "lat")
     spark = layer_a.sparkSession
     empty = spark.createDataFrame([], "osm_id string")
-    out = knn_fallback(
-        a, b, empty, res0=res0, coarse_res=coarse_res, caches=caches
-    )
+    out = knn_fallback(a, b, empty, res0=res0, caches=caches)
     return out.select(
         F.col("osm_id").alias("a_id"),
         F.col("overture_id").alias("b_id"),

@@ -15,12 +15,16 @@ nearest-neighbor fallback for them. Two-phase exact algorithm:
   Phase 2 (stragglers): every straggler first gets a per-row UPPER
   BOUND on its nearest distance —
     hinted   — its phase-1 best candidate distance (+ tie slack);
-    hintless — a COARSE-CELL HISTOGRAM of the build side (occupied
-    cell -> bbox), small enough to broadcast, acts as the distributed
-    analog of the reference's R-tree upper levels: min over occupied
-    cells of the max possible distance to the cell bbox, computed as
-    a map-side partial aggregate (the shuffle carries ONE row per
-    probe, never the probe x cell product).
+    hintless — an OCCUPANCY PYRAMID of the build side: at each coarse
+    ladder level (res0-2, res0-4, ..., and always the world level 0)
+    one narrow row per occupied cell, carrying the bbox of the points
+    in it. Each probe equi-joins its own cell at every level on
+    (lvl, cell) and takes the min over the matched cells of the max
+    possible distance to the bbox; every bbox holds a point, so the
+    min bounds the nearest. Cell indices are clamped into the world's
+    [0, 2^lvl - 1] range on BOTH sides, so level 0 is one cell that
+    every build point occupies and every probe joins — a bound exists
+    for any probe, even outside the Web Mercator domain.
   A hinted straggler's ub is provably <= ~2.13*edge(res0) (cover-bbox
   far corner + slack), so its res0 cover is <= 6x6 and it joins the
   fine path directly. Each HINTLESS straggler picks the finest level
@@ -30,26 +34,21 @@ nearest-neighbor fallback for them. Two-phase exact algorithm:
   so its dynamic cover is ALWAYS <= 6x6 cells regardless of how far
   its nearest neighbor is — and joins the cached build side once on
   the (level, cell) equi-key. The build side is the LAZY broadcast
-  cross product needed-levels x b0, so it materializes exactly the
+  cross product needed-levels x b, so it materializes exactly the
   levels some probe actually chose — zero build rows in the common
   all-fine case. Level choice shapes the physical search
   only; any level is exact because a dynamic cover of radius ub
   contains the whole disk that provably holds the nearest + its
   mm-rounded ties.
 
-The coarse histogram resolution self-tunes (escalates coarser) until
-the occupied-cell count fits the broadcast budget — at planetary
-scale a fixed resolution could exceed driver memory; the common case
-is a single approx_count_distinct probe of the requested resolution
-against the cached build table, and tuning never changes results.
-
 Naive ring-expansion to coarser cells is NOT used: at coarse
 resolutions dense cells make the candidate fan-out quadratic (probes
 x cell population) — measured as the difference between a 2e9-row
-join and a bounded-cover equi-join at sf0.1. The same reasoning
-picks the LADDER join over joining everything at the histogram
-resolution: a ~300 m upper bound covered by ~4.9 km cells drags in
-~130 candidates per cell where fine cells hold ~2.
+join and a bounded-cover equi-join at sf0.1. The pyramid is used
+for BOUNDS only (one row per occupied cell, never its points), so
+that objection does not apply to it; candidates still come from the
+ladder cover, which keeps a ~300 m bound off ~4.9 km cells that
+would drag in ~130 candidates each where fine cells hold ~2.
 
 Tie-break: (rint(dist*1000), id) — millimeter-rounded distance then
 lexicographic id, so single-node oracles (numpy spec, DuckDB)
@@ -66,7 +65,7 @@ fallback and unmatched probes' match rows don't exist, so the cheap
 byproduct (aggregating the persisted MATCH table) cannot hint the
 rows this operator serves. The two-phase design keeps conflation's
 plan clean and bounds every fallback structure (covers <= 6x6 cells,
-histogram <= broadcast budget, shuffles one row per probe).
+pyramid <= one row per occupied cell per level).
 """
 
 from __future__ import annotations
@@ -132,24 +131,6 @@ def _best_per_probe(cand: DataFrame, carry: tuple = ()) -> DataFrame:
     )
 
 
-def _dynamic_cover(ax, ay, radius, res: int):
-    """Exact per-row cell cover of the (x±radius, y±radius) square at
-    `res`, with a per-row DYNAMIC radius column — F.sequence makes
-    the cover exactly as wide as each probe needs."""
-    ix_lo = X.cell_ix(ax - radius, res)
-    ix_hi = X.cell_ix(ax + radius, res)
-    iy_lo = X.cell_iy(ay + radius, res)
-    iy_hi = X.cell_iy(ay - radius, res)
-    return F.flatten(
-        F.transform(
-            F.sequence(ix_lo, ix_hi),
-            lambda i: F.transform(
-                F.sequence(iy_lo, iy_hi), lambda j: X.cell_id(i, j)
-            ),
-        )
-    )
-
-
 def _dyn_edge(res_col):
     """Cell edge in meters for a per-row resolution column (exact for
     integer resolutions: pow(2, r) is dyadic, so the division rounds
@@ -158,8 +139,12 @@ def _dyn_edge(res_col):
 
 
 def _dyn_cover(ax, ay, radius, res_col):
-    """_dynamic_cover with a per-row resolution column — the ladder
-    join's probe side, where each straggler covers at its own level."""
+    """Exact per-row cell cover of the (x±radius, y±radius) square,
+    with a per-row DYNAMIC radius column — F.sequence makes the cover
+    exactly as wide as each probe needs — at a resolution column: a
+    literal res0 (constant-folded to the cell_edge_m(res0) literal)
+    for phase 1 and the fine path, each straggler's own level for the
+    ladder join."""
     edge = _dyn_edge(res_col)
     ix_lo = F.floor((ax - radius + F.lit(X.ORIGIN_M)) / edge).cast("long")
     ix_hi = F.floor((ax + radius + F.lit(X.ORIGIN_M)) / edge).cast("long")
@@ -182,6 +167,28 @@ def _ladder_floor(res0: int) -> int:
     below it would choose a level the build side never enumerates and
     silently drop the probe."""
     return res0 % 2 if res0 >= 2 else res0
+
+
+def _pyramid_cells(x, y, res0: int):
+    """(lvl, cell) of a point at every coarse ladder level (res0-2,
+    res0-4, ..., and always the world level 0), as an array of structs
+    for F.inline. Cell indices are clamped into [0, 2^lvl - 1] — the
+    same clamp on the build points and the probes, so a probe outside
+    the Web Mercator domain still finds occupied cells, and level 0 is
+    one cell that every probe joins and every build point occupies."""
+
+    def clamp(i, lvl):
+        return F.least(F.greatest(i, F.lit(0)), F.lit((1 << lvl) - 1))
+
+    return F.array(*[
+        F.struct(
+            F.lit(lvl).alias("lvl"),
+            X.cell_id(
+                clamp(X.cell_ix(x, lvl), lvl), clamp(X.cell_iy(y, lvl), lvl)
+            ).alias("cell"),
+        )
+        for lvl in sorted({*range(res0 - 2, -1, -2), 0})
+    ])
 
 
 def _ladder_level(ub, res0: int):
@@ -211,15 +218,13 @@ def knn_fallback(
     layer_b: DataFrame,
     matches: DataFrame,
     res0: int = 16,
-    coarse_res: int = 13,
-    max_hist_cells: int = 300_000,
     caches: list | None = None,
 ) -> DataFrame:
     """Nearest layer_b feature for every named layer_a row absent from
     `matches`. Returns (osm_id, overture_id, distance_m).
 
-    Output is invariant to res0/coarse_res/max_hist_cells (they shape
-    the physical search only — property- and oracle-tested).
+    Output is invariant to res0 (it shapes the physical search only —
+    property- and oracle-tested).
 
     `caches`: list the persisted intermediates are appended to; the
     caller unpersists them (release_caches(caches)) after
@@ -253,7 +258,7 @@ def knn_fallback(
     )
     reg.append(probes)
     # ONE cached build table (scanned/derived once, reused by phase 1,
-    # the coarse histogram, and the ladder join), hash-partitioned on
+    # the occupancy pyramid, and the ladder join), hash-partitioned on
     # the res0 `cell` key at cache time: phase 1 AND the phase-2 fine
     # path both equi-join on `cell`, so pre-partitioning the cache
     # removes the build-side Exchange from BOTH joins — the exchange
@@ -278,14 +283,14 @@ def knn_fallback(
         .persist()
     )
     reg.append(b)
-    b0 = b  # histogram / ladder consumers ignore the cell column
-    edge_c = X.cell_edge_m(coarse_res)
 
     # ---- phase 1: dynamic exact cover at radius edge/2 ----
     r1 = X.cell_edge_m(res0) / 2.0
     probe1 = probes.withColumn(
         "cell",
-        F.explode(_dynamic_cover(F.col("ax"), F.col("ay"), F.lit(r1), res0)),
+        F.explode(
+            _dyn_cover(F.col("ax"), F.col("ay"), F.lit(r1), F.lit(res0))
+        ),
     )
     cand1 = probe1.join(b.select("cell", "overture_id", "bx", "by"), "cell").withColumn(
         "dist",
@@ -314,47 +319,26 @@ def knn_fallback(
         "osm_id", "ax", "ay",
         (F.col("dist") + F.lit(_TIE_SLACK_M)).alias("ub"),
     )
-    # hintless: min over occupied coarse cells of the max possible
-    # distance to the cell bbox (each occupied cell holds >=1 point,
-    # so min(maxd) bounds the nearest). The broadcast histogram keeps
-    # this the plan's only nested-loop join; the groupBy is a partial
-    # aggregate, so the shuffle carries ONE row per probe — never the
-    # probe x cell product (the Window this replaces shuffled it all).
+    # hintless: min over the probe's occupied pyramid cells of the
+    # max possible distance to the bbox of the cell's points (each
+    # bbox holds >=1 point, so min(maxd) bounds the nearest). The
+    # pyramid is one narrow row per occupied (lvl, cell), built by one
+    # aggregate whose map-side partial collapses each partition's
+    # points before the exchange; the probe side is ~8 rows per probe.
+    # All of it is equi-joins: no broadcast hint, no nested loop.
     # rest = probes with NO phase-1 candidate at all (not in best1)
-    rest = probes.join(
-        best1.select("osm_id"), "osm_id", "left_anti"
-    ).select("osm_id", "ax", "ay")
-    # Broadcast-bound guard: keep the max_hist_cells DENSEST occupied
-    # cells (deterministic tie-break on the cell id). Correct for ANY
-    # non-empty subset: every kept cell is occupied, so for each probe
-    # min-over-kept-cells of maxdist still upper-bounds the distance
-    # to SOME real point, hence to the nearest — the ladder search is
-    # exact under any valid upper bound (property-tested). This
-    # replaced a driver-side adaptive-resolution sketch whose action
-    # forced a full derivation of the build side at plan-construction
-    # time (measured 6-12 s of the cold wall); the cap is a tiny TopK
-    # over occupied-cell counts, executed inside the DAG. Scale bound:
-    # the TopK's single-partition merge sees at most
-    # min(4^coarse_res, shuffle_partitions * max_hist_cells) histogram
-    # rows (post-aggregate, 16 B each) — one bounded task, guard path
-    # only.
-    hist = (
-        b0.groupBy(
-            X.cell_of(F.col("bx"), F.col("by"), coarse_res).alias("ccell")
+    rest = probes.join(best1.select("osm_id"), "osm_id", "left_anti")
+    pyramid = (
+        b.select(
+            F.inline(_pyramid_cells(F.col("bx"), F.col("by"), res0)),
+            "bx", "by",
         )
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("ccell"))
-        .limit(max_hist_cells)
+        .groupBy("lvl", "cell")
+        .agg(
+            F.min("bx").alias("xlo"), F.max("bx").alias("xhi"),
+            F.min("by").alias("ylo"), F.max("by").alias("yhi"),
+        )
     )
-    ix = F.shiftright(F.col("ccell"), 30)
-    iy = F.col("ccell") - F.shiftleft(ix, 30).cast("long")
-    cells = hist.select(
-        (ix * F.lit(edge_c) - F.lit(X.ORIGIN_M)).alias("xlo"),
-        ((ix + 1) * F.lit(edge_c) - F.lit(X.ORIGIN_M)).alias("xhi"),
-        (F.lit(X.ORIGIN_M) - (iy + 1) * F.lit(edge_c)).alias("ylo"),
-        (F.lit(X.ORIGIN_M) - iy * F.lit(edge_c)).alias("yhi"),
-    )
-    pc = rest.crossJoin(F.broadcast(cells))
     mxx = F.greatest(
         F.abs(F.col("xlo") - F.col("ax")), F.abs(F.col("xhi") - F.col("ax"))
     )
@@ -362,24 +346,27 @@ def knn_fallback(
         F.abs(F.col("ylo") - F.col("ay")), F.abs(F.col("yhi") - F.col("ay"))
     )
     maxdist = F.sqrt(mxx * mxx + mxy * mxy)
-    rest_ub = pc.groupBy("osm_id").agg(
-        (F.min(maxdist) + F.lit(_TIE_SLACK_M)).alias("ub")
-    )
     # one narrow row per HINTLESS straggler; persisted because both
     # the ladder cover and the needed-level prune read it (without the
-    # cache the whole upper-bound pipeline, histogram included, would
+    # cache the whole upper-bound pipeline, pyramid included, would
     # run twice). Hinted stragglers are NOT in this table: their ub is
     # provably <= sqrt(2)*1.5*edge + slack ≈ 2.13*edge (phase-1
     # candidate in the far corner of the cover bbox), so their res0
     # dynamic cover is <= floor(2*2.13)+2 = 6 cells per axis — the
     # same 6x6 bound the ladder guarantees — and they go straight to
     # the fine path below with no level computation. That keeps the
-    # ladder/histogram machinery on the hintless-only branch, which is
+    # ladder/pyramid machinery on the hintless-only branch, which is
     # EMPTY on any corpus dense enough that every probe sees a phase-1
     # candidate (the common case), so the coarse join's inputs carry
     # zero rows there instead of every hinted straggler.
     ubs = (
-        rest.join(rest_ub, "osm_id")
+        rest.select(
+            "osm_id", "ax", "ay",
+            F.inline(_pyramid_cells(F.col("ax"), F.col("ay"), res0)),
+        )
+        .join(pyramid, ["lvl", "cell"])
+        .groupBy("osm_id", "ax", "ay")
+        .agg((F.min(maxdist) + F.lit(_TIE_SLACK_M)).alias("ub"))
         .withColumn("lvl", _ladder_level(F.col("ub"), res0))
         .persist()
     )
@@ -397,7 +384,7 @@ def knn_fallback(
     cand_f = fine.select(
         "osm_id", "ax", "ay", "ub",
         F.explode(
-            _dynamic_cover(F.col("ax"), F.col("ay"), F.col("ub"), res0)
+            _dyn_cover(F.col("ax"), F.col("ay"), F.col("ub"), F.lit(res0))
         ).alias("cell"),
     ).join(b.select("cell", "overture_id", "bx", "by"), "cell").drop("cell")
     # COARSE path (rare: probes whose nearest is beyond 2*edge(res0)):
@@ -416,7 +403,7 @@ def knn_fallback(
             _dyn_cover(F.col("ax"), F.col("ay"), F.col("ub"), F.col("lvl"))
         ).alias("lcell"),
     )
-    # build side = needed-levels x b0 via a broadcast cross join (the
+    # build side = needed-levels x b via a broadcast cross join (the
     # lazy replacement for explode(all levels) + semi-join, which
     # streamed |b| x n_levels rows through the filter even in the
     # common case where NO probe is coarse — this emits exactly
@@ -426,7 +413,7 @@ def knn_fallback(
     needed = coarse.select("lvl").distinct()
     b_ladder = (
         F.broadcast(needed)
-        .crossJoin(b0)
+        .crossJoin(b)
         .select(
             "lvl",
             F.floor(

@@ -23,43 +23,29 @@ def grab_plan(df) -> str:
     return buf.getvalue()
 
 
-def _knn_bnlj_shapes_ok(knn_plan: str) -> bool:
-    """Per-shape BNLJ validation (review fix: a global type check plus
-    marker-anywhere matching let a regressed shape pass). Pair each
-    BNLJ node id from the TREE (which prints the join type) with its
-    DETAIL block (whose consumer Input line carries the output
-    columns), then require the type matches the identified shape:
-      - histogram bbox prune (xlo in consumer input) MUST be
-        Cross BuildRight (tiny bbox table broadcast);
-      - ladder prune (lvl + overture_id) MUST be Cross BuildLeft
-        (tiny needed-levels table broadcast);
-    every BNLJ must classify as exactly one of the two."""
+def _knn_bnlj_ok(knn_plan: str) -> bool:
+    """The knn plan's only nested-loop shape is the ladder build prune:
+    needed-levels x b (lvl + overture_id in the consumer's Input line,
+    no histogram bbox xlo), broadcasting the tiny needed-levels side,
+    i.e. Cross BuildLeft. Each BNLJ node id from the TREE (which
+    prints the join type) is paired with its own DETAIL block, so any
+    other nested loop — or the ladder broadcasting its unbounded
+    side — fails."""
     tree = {
         nid: t.strip()
         for t, nid in re.findall(
             r"BroadcastNestedLoopJoin ([A-Za-z ]+)\((\d+)\)", knn_plan
         )
     }
-    if not tree:
-        return False
     details = re.split(r"\((\d+)\) BroadcastNestedLoopJoin", knn_plan)[1:]
     pairs = list(zip(details[0::2], details[1::2]))  # (node id, block)
-    if not pairs:
-        return False
-    for nid, block in pairs:
-        head = block[:800]
-        hist = "xlo" in head
-        ladder = "lvl" in head and "overture_id" in head and not hist
-        jt = tree.get(nid, "")
-        if hist:
-            if jt != "Cross BuildRight":
-                return False
-        elif ladder:
-            if jt != "Cross BuildLeft":
-                return False
-        else:
-            return False
-    return True
+    return bool(pairs) and all(
+        tree.get(nid) == "Cross BuildLeft"
+        and "lvl" in block[:800]
+        and "overture_id" in block[:800]
+        and "xlo" not in block[:800]
+        for nid, block in pairs
+    )
 
 
 def main():
@@ -116,7 +102,7 @@ def main():
     sections.append(("Stable match-id assignment W7", ids_plan, None))
 
     # 6. kNN fallback: one cached build table reused across phases,
-    # exactly one broadcast nested-loop (the histogram prune), and no
+    # exactly one broadcast nested-loop shape (the ladder prune), and no
     # Python added by the operator itself (matches passed as a plain
     # id table so the conflation UDF's lineage doesn't blur the check)
     from overmatch_spark.operators.knn import knn_fallback
@@ -232,22 +218,18 @@ def main():
         "knn reuses ONE cached build table across phases (>=3 cache scans)",
         len(re.findall(r"InMemoryTableScan", knn_plan)) >= 3,
     )
-    # TWO broadcast nested-loop shapes are allowed, both provably
-    # bounded: the histogram prune (tiny bbox table broadcast, MUST
-    # be Cross BuildRight, identified by xlo in the consumer's Input
-    # line) and the ladder build prune (needed-levels x b0, MUST be
-    # Cross BuildLeft, identified by lvl + overture_id). Validation
-    # is PER SHAPE — each BNLJ node id pairs its tree-line join type
-    # with its own detail block (_knn_bnlj_shapes_ok), so a shape
-    # regressing to broadcasting the unbounded side fails even if the
-    # other shape's type still appears somewhere in the plan. The
-    # formatted plan reprints a cached relation's stored plan at each
-    # scan site, so occurrences are counted by shape, not number;
-    # nothing may fall back to a cartesian.
+    # ONE broadcast nested-loop shape is allowed, provably bounded:
+    # the ladder build prune (needed-levels x b, MUST be Cross
+    # BuildLeft, identified by lvl + overture_id). The hintless bound
+    # comes from equi-joins on the occupancy pyramid, so no histogram
+    # nested loop (xlo) may appear, and nothing may fall back to a
+    # cartesian. The formatted plan reprints a cached relation's
+    # stored plan at each scan site, so occurrences are checked by
+    # shape, not counted.
     check(
-        "knn nested-loop joins are ONLY the bounded broadcast prunes "
-        "(per-shape: histogram bbox=BuildRight, ladder=BuildLeft)",
-        _knn_bnlj_shapes_ok(knn_plan)
+        "knn nested-loop joins are ONLY the ladder build prune "
+        "(Cross BuildLeft; no histogram bbox loop, no cartesian)",
+        _knn_bnlj_ok(knn_plan)
         and "CartesianProduct" not in knn_plan,
     )
     check(

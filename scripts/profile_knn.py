@@ -82,8 +82,8 @@ def main():
     # a stage (the final noop then pays only the ladder join + union)
     caches = []
     out = knn_fallback(a, b, m, caches=caches, **kw)
-    # caches order: probes, b0, best1, ubs (see knn_fallback)
-    names = ["probes", "b0", "best1", "ubs"][: len(caches)]
+    # caches order: probes, b, best1, ubs (see knn_fallback)
+    names = ["probes", "b", "best1", "ubs"][: len(caches)]
     print(f"alu: {alu_ops():.2f}", flush=True)
     t_all0 = time.time()
     for name, df in zip(names, list(caches)):

@@ -33,6 +33,69 @@ def _spark_layers(spark, layers):
     return sa, sb
 
 
+def _hashpts(n, salt):
+    """n deterministic points spread over the whole Web Mercator map."""
+    ks = np.arange(n, dtype=np.int64)
+    hx = ((ks * 2654435761 + salt) % (2**20)) / float(2**20)
+    hy = ((ks * 97003999 + salt * 7 + 13) % (2**20)) / float(2**20)
+    return -179.0 + 358.0 * hx, -80.0 + 160.0 * hy
+
+
+def _knn_inputs(probes, build):
+    """pandas (layer_a, layer_b) from [(lon, lat)] lists."""
+    a_pd = pd.DataFrame(
+        {
+            "osm_id": [f"node/{k}" for k in range(len(probes))],
+            "name": [f"P{k}" for k in range(len(probes))],
+            "lon": [float(p[0]) for p in probes],
+            "lat": [float(p[1]) for p in probes],
+        }
+    )
+    b_pd = pd.DataFrame(
+        {
+            "id": [f"b/{k}" for k in range(len(build))],
+            "lon": [float(p[0]) for p in build],
+            "lat": [float(p[1]) for p in build],
+        }
+    )
+    return a_pd, b_pd
+
+
+def _spread_inputs(n_probes, salt):
+    """3,000 build points and n_probes probes spread over the globe.
+    The hash is linear in k, so the probes are the build lattice
+    shifted by the salt difference: salt 1001 puts every probe
+    120-170 km from its nearest build point."""
+    blon, blat = _hashpts(3000, 5)
+    alon, alat = _hashpts(n_probes, salt)
+    return _knn_inputs(list(zip(alon, alat)), list(zip(blon, blat)))
+
+
+def _knn_vs_spec(spark, a_pd, b_pd, res0, caches, before_action=None):
+    """Run knn_fallback with no matches and assert it equals knn_spec
+    exactly. `before_action(caches)` runs between plan construction
+    and the action."""
+    from overmatch_spark.operators.knn import knn_fallback
+
+    out = knn_fallback(
+        spark.createDataFrame(a_pd),
+        spark.createDataFrame(b_pd),
+        spark.createDataFrame([], "osm_id string"),
+        res0=res0,
+        caches=caches,
+    )
+    if before_action is not None:
+        before_action(caches)
+    got = out.toPandas().sort_values("osm_id").reset_index(drop=True)
+    want = knn_spec(a_pd, b_pd, pd.DataFrame({"osm_id": []}))
+    assert len(got) == len(want) == len(a_pd)
+    pd.testing.assert_frame_equal(
+        got[["osm_id", "overture_id", "distance_m"]],
+        want[["osm_id", "overture_id", "distance_m"]],
+        check_exact=True,
+    )
+
+
 class TestKnn:
     def test_knn_golden(self, spark, layers, golden):
         from overmatch_spark.operators.conflate import conflate
@@ -51,9 +114,7 @@ class TestKnn:
             caches: list = []
             try:
                 got = (
-                    knn_fallback(
-                        sa, sb, m, res0=res0, coarse_res=12, caches=caches
-                    )
+                    knn_fallback(sa, sb, m, res0=res0, caches=caches)
                     .toPandas()
                     .sort_values("osm_id")
                     .reset_index(drop=True)
@@ -318,66 +379,26 @@ class TestDedupKernels:
         assert got == pytest.approx(1 / np.sqrt(2), rel=1e-12)
 
 
-class TestKnnHistogramCap:
-    def test_histogram_budget_cap_is_output_invariant(self, spark):
-        """Phase-2b broadcast guard: a build side spread over far more
-        coarse cells than the histogram budget gets its broadcast
-        histogram capped to the max_hist_cells densest cells — any
-        non-empty subset of occupied cells yields valid (looser)
-        upper bounds, so results match the numpy spec exactly."""
-        import numpy as np
+class TestKnnPyramid:
+    def test_pyramid_bound_matches_spec(self, spark):
+        """Hintless stragglers get their upper bound from the build
+        side's occupancy pyramid alone. On a globally spread build side
+        every probe is hintless, so every output row comes through the
+        pyramid bound and the coarse ladder join — and must equal the
+        numpy spec exactly, for even and odd res0."""
+        from overmatch_spark.operators.knn import release_caches
 
-        from overmatch_spark import expressions as X
-        from overmatch_spark.operators.knn import knn_fallback
-        from overmatch_spark.spec import knn_spec
-        from pyspark.sql import functions as F
-
-        def hashpts(n, salt):
-            ks = np.arange(n, dtype=np.int64)
-            hx = ((ks * 2654435761 + salt) % (2**20)) / float(2**20)
-            hy = ((ks * 97003999 + salt * 7 + 13) % (2**20)) / float(2**20)
-            return -179.0 + 358.0 * hx, -80.0 + 160.0 * hy
-
-        import pandas as pd
-
-        blon, blat = hashpts(3000, 5)
-        b_pd = pd.DataFrame(
-            {"id": [f"b/{k}" for k in range(3000)], "lon": blon, "lat": blat}
-        )
-        alon, alat = hashpts(50, 11)
-        a_pd = pd.DataFrame(
-            {
-                "osm_id": [f"node/{k}" for k in range(50)],
-                "name": [f"P{k}" for k in range(50)],
-                "housenumber": [None] * 50,
-                "lon": alon,
-                "lat": alat,
-            }
-        )
-        a = spark.createDataFrame(a_pd)
-        b = spark.createDataFrame(b_pd)
-        empty_matches = spark.createDataFrame([], "osm_id string")
-
-        # precondition: globally-spread points occupy >> budget res-13
-        # cells, so the cap genuinely truncates the histogram
-        b0 = b.select(
-            X.merc_x(F.col("lon")).alias("bx"), X.merc_y(F.col("lat")).alias("by")
-        )
-        occupied = b0.select(
-            X.cell_of(F.col("bx"), F.col("by"), 13).alias("c")
-        ).distinct().count()
-        assert occupied > 500
-
-        got = (
-            knn_fallback(a, b, empty_matches, max_hist_cells=500)
-            .toPandas()
-            .sort_values("osm_id")
-            .reset_index(drop=True)
-        )
-        want = knn_spec(a_pd, b_pd, pd.DataFrame({"osm_id": []}))
-        assert got["osm_id"].tolist() == want["osm_id"].tolist()
-        assert got["overture_id"].tolist() == want["overture_id"].tolist()
-        assert np.allclose(got["distance_m"], want["distance_m"], atol=0, rtol=0)
+        a_pd, b_pd = _spread_inputs(50, 1001)
+        for res0 in (16, 15):
+            caches: list = []
+            try:
+                _knn_vs_spec(spark, a_pd, b_pd, res0, caches)
+                # precondition: no probe has a phase-1 candidate
+                # (caches: probes, b, best1, ubs — see knn_fallback)
+                best1 = caches[2]
+                assert best1.count() == 0
+            finally:
+                release_caches(caches)
 
     def test_construction_launches_no_jobs(self, spark):
         """knn_fallback must contain ZERO driver-side actions: the
@@ -990,7 +1011,7 @@ class TestTags:
 class TestKnnHintless:
     def test_probe_with_empty_neighborhood(self, spark):
         """A probe >100 km from every candidate has NO phase-1 hint —
-        exercises the histogram-pruned phase 2b exclusively."""
+        exercises the pyramid-bounded phase 2 exclusively."""
         from overmatch_spark.operators.knn import knn_fallback
 
         a = spark.createDataFrame(
@@ -1020,3 +1041,84 @@ class TestKnnHintless:
         assert len(got) == 1
         # true nearest by planar 3857 distance is ov/y (-77.5, 38.7)
         assert got.iloc[0]["overture_id"] == "ov/y"
+
+    # Edge inputs for the pyramid's clamp and world-cell level; the
+    # nearest of every probe lies far outside its phase-1 cover.
+    _EDGES = {
+        # odd res0 floors the ladder at level 1, whose quadrant under
+        # the probe is empty: only the world level bounds it
+        "opposite_quadrant": (
+            [(-80.0, 40.0)],
+            [(100.0, -30.0), (100.5, -30.2), (99.7, -29.9)],
+        ),
+        # lat 89.9 projects to y ~ 4.5e7 m, outside the map square
+        "probe_lat_89_9": (
+            [(10.0, 89.9)],
+            [(10.0, 60.0), (-40.0, 70.0), (120.0, -10.0)],
+        ),
+        "build_lat_89_9": (
+            [(10.0, 85.0), (-60.0, 0.0)],
+            [(10.0, 89.9), (60.0, -60.0), (-150.0, -70.0)],
+        ),
+        # north of the map every cell row index is negative: only the
+        # clamp puts these points in cells a probe can join
+        "every_build_point_north_of_map": (
+            [(10.0, 85.0), (-60.0, 0.0)],
+            [(10.0, 89.9), (-100.0, 89.95)],
+        ),
+        # planar distance does not wrap: the neighbours just across
+        # the antimeridian are a map-width away
+        "antimeridian": (
+            [(179.99, 10.0)],
+            [(-179.99, 10.0), (-179.5, 10.2), (-170.0, 10.0)],
+        ),
+    }
+
+    @pytest.mark.parametrize("case", sorted(_EDGES))
+    def test_edge_inputs_match_spec(self, spark, case):
+        from overmatch_spark.operators.knn import release_caches
+
+        a_pd, b_pd = _knn_inputs(*self._EDGES[case])
+        for res0 in (16, 15):
+            caches: list = []
+            try:
+                _knn_vs_spec(spark, a_pd, b_pd, res0, caches)
+            finally:
+                release_caches(caches)
+
+
+class TestKnnCacheLoss:
+    @pytest.mark.parametrize("res0", [16, 15])
+    def test_output_survives_unpersisted_caches(self, spark, res0):
+        """The returned DataFrame is lazy over the persisted
+        intermediates; losing every one of them before the action must
+        recompute them to the same result. Probes sit on build points
+        (phase-1 exits), ~450 m off them (stragglers) and far away
+        (hintless), so every cache feeds the output."""
+        from overmatch_spark.operators.knn import release_caches
+
+        a_pd, b_pd = _spread_inputs(20, 1001)
+        near = b_pd.iloc[:20]
+        a_pd = pd.concat(
+            [
+                a_pd,
+                pd.DataFrame(
+                    {
+                        "osm_id": [f"node/on{k}" for k in range(10)]
+                        + [f"node/off{k}" for k in range(10)],
+                        "name": ["x"] * 20,
+                        "lon": list(near["lon"][:10])
+                        + list(near["lon"][10:] + 0.004),
+                        "lat": list(near["lat"]),
+                    }
+                ),
+            ],
+            ignore_index=True,
+        )
+        caches: list = []
+        try:
+            _knn_vs_spec(
+                spark, a_pd, b_pd, res0, caches, before_action=release_caches
+            )
+        finally:
+            release_caches(caches)
