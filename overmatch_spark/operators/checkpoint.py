@@ -4,7 +4,7 @@ run resumes mid-job without recomputing completed cells").
 
 Reference precedent: the KV loader's skip-existing resume + batch
 retry (/root/reference/api/load_matches.py:105-142,176-264). Here the
-unit of work is a SPATIAL BUCKET: a hash of the coarse cell id, so
+unit of work is a SPATIAL BUCKET: a hash of the join's cell id, so
 bucket boundaries respect the cell-join locality:
 
   - layer_b rows live in exactly one bucket (their cell's bucket).
@@ -31,75 +31,45 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from overmatch_spark import expressions as X
-from overmatch_spark.udfs import indel_sim
+from overmatch_spark.operators.conflate import (
+    DEFAULT_BUFFER_M,
+    DEFAULT_RES,
+    DEFAULT_SIM,
+    _refine,
+    _sides,
+)
 
 
 class ConflationJob:
-    def __init__(
-        self,
-        spark: SparkSession,
-        work_dir: str,
-        n_buckets: int = 32,
-        res: int = 18,
-        buffer_m: float = 100.0,
-        sim_threshold: float = 0.6,
-    ):
+    """`conflate`'s J1-J5 at conflate's defaults, split into spatial
+    buckets that commit and resume independently."""
+
+    def __init__(self, spark: SparkSession, work_dir: str, n_buckets: int = 32):
         self.spark = spark
         self.work_dir = work_dir
         self.n_buckets = n_buckets
-        self.res = res
-        self.buffer_m = buffer_m
-        self.sim_threshold = sim_threshold
         self.stage_dir = os.path.join(work_dir, "stage")
         self.sink_dir = os.path.join(work_dir, "matches")
         self.lineage_dir = os.path.join(work_dir, "lineage")
 
     # -- stage 0: bucketed materialization ---------------------------------
     def prepare(self, layer_a: DataFrame, layer_b: DataFrame) -> None:
-        bucket_of = lambda cell: F.pmod(F.xxhash64(cell), F.lit(self.n_buckets))
-
-        a = (
-            layer_a.filter(F.col("name").isNotNull() & (F.col("name") != ""))
-            .select(
-                "osm_id",
-                F.col("name").alias("a_name"),
-                F.col("housenumber").alias("a_housenumber"),
-                X.merc_x(F.col("lon")).alias("ax"),
-                X.merc_y(F.col("lat")).alias("ay"),
-            )
-            .withColumn(
-                "cell",
-                F.explode(
-                    X.cover_cells(F.col("ax"), F.col("ay"), self.res, self.buffer_m)
-                ),
-            )
-            .withColumn("bucket", bucket_of(F.col("cell")))
-        )
-        b = (
-            layer_b.select(
-                F.col("id").alias("overture_id"),
-                F.col("name").alias("b_name"),
-                F.col("housenumber").alias("b_housenumber"),
-                F.col("lon").alias("b_lon"),
-                F.col("lat").alias("b_lat"),
-                X.merc_x(F.col("lon")).alias("bx"),
-                X.merc_y(F.col("lat")).alias("by"),
-            )
-            .withColumn("cell", X.cell_of(F.col("bx"), F.col("by"), self.res))
-            .withColumn("bucket", bucket_of(F.col("cell")))
-        )
-        a.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(self.stage_dir, "a")
-        )
-        b.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(self.stage_dir, "b")
-        )
+        # new inputs void the old buckets; lineage goes first so a crash
+        # mid-prepare leaves no bucket marked done
+        shutil.rmtree(self.lineage_dir, ignore_errors=True)
+        shutil.rmtree(self.sink_dir, ignore_errors=True)
+        bucket = F.pmod(F.xxhash64(F.col("cell")), F.lit(self.n_buckets))
+        sides = _sides(layer_a, layer_b, DEFAULT_RES, DEFAULT_BUFFER_M)
+        for name, side in zip(("a", "b"), sides):
+            side.withColumn("bucket", bucket).write.mode("overwrite").partitionBy(
+                "bucket"
+            ).parquet(os.path.join(self.stage_dir, name))
 
     # -- lineage ------------------------------------------------------------
     def completed_buckets(self) -> set[int]:
@@ -146,32 +116,7 @@ class ConflationJob:
             # partition-pruned scans: only bucket=k bytes are read
             a = self.spark.read.parquet(a_path).filter(F.col("bucket") == k)
             b = self.spark.read.parquet(b_path).filter(F.col("bucket") == k)
-            cand = a.join(b, "cell").withColumn(
-                "dist",
-                X.planar_distance(
-                    F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")
-                ),
-            ).filter(F.col("dist") <= F.lit(self.buffer_m))
-            out = (
-                cand.filter(F.col("b_name").isNotNull() & (F.col("b_name") != ""))
-                .withColumn(
-                    "similarity", indel_sim(F.col("a_name"), F.col("b_name"))
-                )
-                .filter(F.col("similarity") >= F.lit(self.sim_threshold))
-                .filter(
-                    F.col("a_housenumber").isNull()
-                    | F.col("b_housenumber").isNull()
-                    | (F.col("a_housenumber") == F.col("b_housenumber"))
-                )
-                .select(
-                    "osm_id",
-                    "overture_id",
-                    F.col("b_lon").alias("lon"),
-                    F.col("b_lat").alias("lat"),
-                    X.round1(F.col("dist")).alias("distance_m"),
-                    "similarity",
-                )
-            )
+            out = _refine(a.join(b, "cell"), DEFAULT_BUFFER_M, DEFAULT_SIM)
             sink = os.path.join(self.sink_dir, f"bucket={k}")
             out.write.mode("overwrite").parquet(sink)  # idempotent per bucket
             n = self.spark.read.parquet(sink).count()
@@ -181,8 +126,8 @@ class ConflationJob:
                     "bucket": k,
                     "n_matches": n,
                     "wall_ms": int((time.time() - t0) * 1000),
-                    "res": self.res,
-                    "buffer_m": self.buffer_m,
+                    "res": DEFAULT_RES,
+                    "buffer_m": DEFAULT_BUFFER_M,
                 },
             )
         return len(pending)

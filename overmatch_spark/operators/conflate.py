@@ -21,8 +21,12 @@ Physical notes (SURVEY.md §4.2):
     and deliberate.
   - Only narrow columns enter the join. Any payload (image bytes)
     must be re-attached by id afterwards — see attach_payload().
-  - Skew: dense urban cells get an explicit salt (salted_cell_join),
-    with AQE skew-join enabled as backstop.
+  - Skew: dense urban cells get an explicit salt (`hot_cells` /
+    `salt_factor`; the hot set is a list or a (cell) DataFrame, both
+    taking one broadcast-flag path), with AQE skew-join enabled as
+    backstop.
+  - `checkpoint.ConflationJob` runs the same J1-J5 through `_sides`
+    and `_refine`, bucketing between the two.
 """
 
 from __future__ import annotations
@@ -40,15 +44,6 @@ from overmatch_spark.udfs import indel_sim
 DEFAULT_RES = 17
 DEFAULT_BUFFER_M = 100.0
 DEFAULT_SIM = 0.6
-
-
-def with_mercator(df: DataFrame, lon: str = "lon", lat: str = "lat",
-                  x: str = "x", y: str = "y") -> DataFrame:
-    """EPSG:4326 -> EPSG:3857 (reference match.py:116-121), as pure
-    column expressions."""
-    return df.withColumn(x, X.merc_x(F.col(lon))).withColumn(
-        y, X.merc_y(F.col(lat))
-    )
 
 
 def detect_hot_cells(layer_b: DataFrame, res: int = DEFAULT_RES,
@@ -78,30 +73,12 @@ def detect_hot_cells_df(layer_b: DataFrame, res: int = DEFAULT_RES,
     )
 
 
-def conflate(
-    layer_a: DataFrame,
-    layer_b: DataFrame,
-    buffer_m: float = DEFAULT_BUFFER_M,
-    sim_threshold: float = DEFAULT_SIM,
-    res: int = DEFAULT_RES,
-    hot_cells: list[int] | None = None,
-    salt_factor: int = 8,
-    broadcast_b: bool = False,
-) -> DataFrame:
-    """Match rows per the reference's exact semantics.
-
-    layer_a columns: osm_id, name, housenumber (nullable), lon, lat
-    layer_b columns: id, name, housenumber (nullable), lon, lat
-
-    Returns: osm_id, overture_id, lon, lat (layer_b's ORIGINAL 4326
-    values — match.py:112-114,399-400), distance_m (planar 3857,
-    rounded 0.1 — match.py:401), similarity.
-
-    Output is invariant to `res`, `hot_cells`, `salt_factor`, and
-    `broadcast_b` (property-tested): they change the physical plan,
-    never the result.
-    """
-    # --- prepare sides (narrow projections only — payload stays out) ---
+def _sides(layer_a: DataFrame, layer_b: DataFrame, res: int,
+           buffer_m: float) -> tuple[DataFrame, DataFrame]:
+    """J1/J2: the probe side exploded to the cells covering its buffer
+    square and the build side keyed by its own cell, both with a
+    `cell` column to equi-join on. Narrow projections only — payload
+    stays out."""
     a = (
         layer_a
         # P6: null/empty-name rows produce no matches (match.py:203-207)
@@ -123,55 +100,24 @@ def conflate(
         X.merc_x(F.col("lon")).alias("bx"),
         X.merc_y(F.col("lat")).alias("by"),
     ).withColumn("cell", X.cell_of(F.col("bx"), F.col("by"), res))
-
-    # --- J2: cell-cover explode on the probe side, equi-join on cell ---
     a = a.withColumn(
         "cell", F.explode(X.cover_cells(F.col("ax"), F.col("ay"), res, buffer_m))
     )
+    return a, b
 
-    if hot_cells is not None and not isinstance(hot_cells, (list, tuple)):
-        # DataFrame of hot cell ids: broadcast-join the flag so the
-        # hot set never transits the driver (the 100x-scale path)
-        # distinct: a duplicate cell id in the hot set would duplicate
-        # every joined row (the API accepts any (cell)-schema DataFrame)
-        hot = F.broadcast(
-            hot_cells.select("cell").distinct().withColumn("_hot", F.lit(True))
-        )
-        k = F.when(F.coalesce(F.col("_hot"), F.lit(False)), F.lit(salt_factor)
-                   ).otherwise(F.lit(1))
-        b = b.join(hot, "cell", "left").withColumn(
-            "salt", F.pmod(F.xxhash64(F.col("overture_id")), k).cast("int")
-        ).drop("_hot")
-        a = a.join(hot, "cell", "left").withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), k.cast("int") - F.lit(1)))
-        ).drop("_hot")
-        join_keys = ["cell", "salt"]
-    elif hot_cells and salt_factor > 1:
-        k = F.when(F.col("cell").isin(list(hot_cells)), F.lit(salt_factor)).otherwise(
-            F.lit(1)
-        )
-        b = b.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col("overture_id")), k).cast("int")
-        )
-        a = a.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), k.cast("int") - F.lit(1)))
-        )
-        join_keys = ["cell", "salt"]
-    else:
-        join_keys = ["cell"]
 
-    right = F.broadcast(b) if broadcast_b else b
-    cand = a.join(right, join_keys, "inner")
+def _refine(cand: DataFrame, buffer_m: float,
+            sim_threshold: float) -> DataFrame:
+    """J3-J5 over the joined candidate pairs, then the output schema.
+    J3 comes first so only pairs within the buffer reach J4's UDF.
 
+    No pair-dedup is needed: a build row lives in exactly one cell
+    (and, salted, carries exactly one salt) while the probe side
+    enumerates distinct join keys, so each qualifying pair arrives
+    exactly once."""
     # --- J3: exact planar distance (inclusive <=, match.py:225) ---
     dist = X.planar_distance(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
     cand = cand.withColumn("dist", dist).filter(F.col("dist") <= F.lit(buffer_m))
-
-    # No pair-dedup is needed: a build row lives in exactly one cell
-    # and carries exactly one salt, while the probe side enumerates
-    # distinct (cell, salt) keys — each qualifying pair joins exactly
-    # once. (Property-tested: salt/res never change the output.)
-    cand = cand.drop("cell", *(["salt"] if "salt" in join_keys else []))
 
     # --- J4: indel name similarity (inclusive >=, match.py:244);
     #     empty candidate names never match (match.py:239) ---
@@ -197,6 +143,65 @@ def conflate(
         X.round1(F.col("dist")).alias("distance_m"),
         "similarity",
     )
+
+
+def conflate(
+    layer_a: DataFrame,
+    layer_b: DataFrame,
+    buffer_m: float = DEFAULT_BUFFER_M,
+    sim_threshold: float = DEFAULT_SIM,
+    res: int = DEFAULT_RES,
+    hot_cells: list[int] | DataFrame | None = None,
+    salt_factor: int = 8,
+    broadcast_b: bool = False,
+) -> DataFrame:
+    """Match rows per the reference's exact semantics.
+
+    layer_a columns: osm_id, name, housenumber (nullable), lon, lat
+    layer_b columns: id, name, housenumber (nullable), lon, lat
+
+    Returns: osm_id, overture_id, lon, lat (layer_b's ORIGINAL 4326
+    values — match.py:112-114,399-400), distance_m (planar 3857,
+    rounded 0.1 — match.py:401), similarity.
+
+    `hot_cells` (a list of cell ids at `res`, or a (cell)-schema
+    DataFrame) names the cells whose build rows are spread over
+    `salt_factor` salts.
+
+    Output is invariant to `res`, `hot_cells`, `salt_factor`, and
+    `broadcast_b` (property-tested): they change the physical plan,
+    never the result.
+    """
+    a, b = _sides(layer_a, layer_b, res, buffer_m)
+
+    if isinstance(hot_cells, (list, tuple)):
+        # an empty list salts nothing; a non-empty one is parallelized
+        # lazily, so building the relation launches no job
+        spark = layer_b.sparkSession
+        hot_cells = (
+            spark.createDataFrame([(int(c),) for c in hot_cells], "cell long")
+            if hot_cells else None
+        )
+    join_keys = ["cell"]
+    if hot_cells is not None and salt_factor > 1:
+        # broadcast-join the hot flag so the hot set never transits the
+        # driver; distinct: a duplicate cell id in the hot set would
+        # duplicate every joined row
+        hot = F.broadcast(
+            hot_cells.select("cell").distinct().withColumn("_hot", F.lit(True))
+        )
+        k = F.when(F.coalesce(F.col("_hot"), F.lit(False)), F.lit(salt_factor)
+                   ).otherwise(F.lit(1))
+        b = b.join(hot, "cell", "left").withColumn(
+            "salt", F.pmod(F.xxhash64(F.col("overture_id")), k).cast("int")
+        ).drop("_hot")
+        a = a.join(hot, "cell", "left").withColumn(
+            "salt", F.explode(F.sequence(F.lit(0), k.cast("int") - F.lit(1)))
+        ).drop("_hot")
+        join_keys.append("salt")
+
+    right = F.broadcast(b) if broadcast_b else b
+    return _refine(a.join(right, join_keys, "inner"), buffer_m, sim_threshold)
 
 
 def spatial_join(

@@ -294,20 +294,5 @@ def main():
     spark.stop()
 
 
-def _filter_before_udf(plan: str) -> bool:
-    """In the formatted plan, the dist<=100 Filter must be a child of
-    (executed before) the ArrowEvalPython node: its node id is larger
-    (formatted plans number parents before children top-down)."""
-    udf = re.search(r"\((\d+)\) ArrowEvalPython", plan)
-    filt = None
-    for m in re.finditer(r"\((\d+)\) Filter", plan):
-        nid = int(m.group(1))
-        seg = plan[m.end():m.end() + 400]
-        if "100.0" in seg:
-            filt = nid
-            break
-    return udf is not None and filt is not None and filt < int(udf.group(1))
-
-
 if __name__ == "__main__":
     main()

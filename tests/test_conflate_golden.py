@@ -7,7 +7,11 @@ import pandas as pd
 import pytest
 
 from overmatch_spark import fixtures
-from overmatch_spark.operators.conflate import conflate, detect_hot_cells
+from overmatch_spark.operators.conflate import (
+    DEFAULT_RES,
+    conflate,
+    detect_hot_cells,
+)
 from overmatch_spark.spec import conflate_spec
 
 N_IMAGES = 1200
@@ -72,17 +76,16 @@ def test_salt_invariance(spark, layers, golden):
     bxy = sb.withColumn("x", X.merc_x(F.col("lon"))).withColumn(
         "y", X.merc_y(F.col("lat"))
     )
-    hot = detect_hot_cells(bxy, res=18, threshold=20)
+    # hot cells at the join's own resolution, so the salt engages
+    hot = detect_hot_cells(bxy, res=DEFAULT_RES, threshold=20)
     assert hot, "fixture must contain at least one hot cell (skew)"
     got = conflate(sa, sb, hot_cells=hot, salt_factor=4).toPandas()
     assert_equal_matches(got, golden)
 
-    # DataFrame hot-cell path (broadcast-join salting — hot ids never
-    # transit the driver), at the join's own resolution so the salt
-    # genuinely engages
+    # DataFrame hot set: hot ids never transit the driver
     from overmatch_spark.operators.conflate import detect_hot_cells_df
 
-    hot_df = detect_hot_cells_df(bxy, res=17, threshold=20)
+    hot_df = detect_hot_cells_df(bxy, res=DEFAULT_RES, threshold=20)
     assert hot_df.count() > 0
     got2 = conflate(sa, sb, hot_cells=hot_df, salt_factor=4).toPandas()
     assert_equal_matches(got2, golden)

@@ -226,6 +226,33 @@ class TestCheckpointResume:
         # idempotent: a second run does nothing
         assert job.run() == 0
 
+    def test_reprepare_replaces_old_matches(self, spark, tmp_path):
+        """A second prepare on the same work dir must void the first
+        inputs' lineage, or run() skips every bucket and result()
+        keeps returning the old matches."""
+        from overmatch_spark.operators.checkpoint import ConflationJob
+
+        def layers(a_id, b_id):
+            a = spark.createDataFrame(
+                [(a_id, "Blue Fork Cafe", None, 2.35, 48.85)],
+                "osm_id string, name string, housenumber string, "
+                "lon double, lat double",
+            )
+            b = spark.createDataFrame(
+                [(b_id, "Blue Fork Cafe", None, 2.3501, 48.85)],
+                "id string, name string, housenumber string, "
+                "lon double, lat double",
+            )
+            return a, b
+
+        job = ConflationJob(spark, str(tmp_path / "job"), n_buckets=2)
+        job.prepare(*layers("a1", "b1"))
+        assert job.run() == 2
+        job.prepare(*layers("a2", "b2"))
+        assert job.run() == 2
+        got = [tuple(r) for r in job.result().select("osm_id", "overture_id").collect()]
+        assert got == [("a2", "b2")]
+
 
 class TestImages:
     def test_payload_invariants(self, spark):
@@ -438,6 +465,42 @@ class TestKnnPyramid:
         with _pytest.raises(Exception, match="evaluated at construction"):
             out.count()
         knn_mod.release_caches(caches)
+
+
+class TestConflateConstruction:
+    def test_salted_construction_launches_no_jobs(self, spark):
+        """Salting by a hot-cell list or DataFrame must build its plan
+        without a driver action: inputs are poisoned so evaluating ANY
+        row raises, and only materializing does."""
+        from pyspark.sql import functions as F
+
+        from overmatch_spark.operators.conflate import (
+            conflate,
+            detect_hot_cells_df,
+        )
+
+        poison = F.when(
+            F.col("id") >= 0, F.raise_error("evaluated at construction")
+        ).otherwise(F.lit(None)).cast("double")
+
+        def layer(id_col):
+            return spark.range(4).select(
+                F.col("id").cast("string").alias(id_col),
+                F.lit("x").alias("name"),
+                F.lit(None).cast("string").alias("housenumber"),
+                poison.alias("lon"),
+                poison.alias("lat"),
+            )
+
+        a, b = layer("osm_id"), layer("id")
+        hot_df = detect_hot_cells_df(
+            b.select(F.col("lon").alias("x"), F.col("lat").alias("y")),
+            threshold=0,
+        )
+        for hot in ([1, 2], hot_df):
+            out = conflate(a, b, hot_cells=hot, salt_factor=4)  # must not raise
+            with pytest.raises(Exception, match="evaluated at construction"):
+                out.count()
 
 
 class TestMatchIds:
